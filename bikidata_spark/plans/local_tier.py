@@ -525,7 +525,7 @@ class TermDict:
 
     def values_of(self, keys: np.ndarray):
         """(values object array, found mask) for int64 hash keys —
-        the bulk h2v.get. Missing hashes get found=False (the
+        the one hash -> value decode. Missing hashes get found=False (the
         distributed terms join drops them); overlay terms resolve
         through the extra dict."""
         idx, found = self.base_indices(keys)
@@ -645,19 +645,6 @@ class TermDict:
         return vo
 
     # ---- scalar ----------------------------------------------------------
-
-    def get(self, h: int):
-        """Value for one hash, or None (scalar h2v.get)."""
-        v = self.extra.get(h)
-        if v is not None:
-            return v
-        th = self.th
-        if th.size == 0:
-            return None
-        i = int(np.searchsorted(th, h))
-        if i >= th.size or int(th[i]) != h:
-            return None
-        return bytes(self.blob[self.start[i] : self.end[i]]).decode("utf-8")
 
     def contains_hash(self, h: int) -> bool:
         if h in self.extra:
@@ -788,23 +775,14 @@ class TermDict:
 
 
 class _H2V:
-    """Mapping view over TermDict: the tier's hash -> value surface
-    (plans/query.Engine.mutate and serving_pool write through it)."""
+    """Mapping view over TermDict for the mutation path: membership
+    and term writes (plans/query.Engine.mutate and serving_pool write
+    through it); reads decode in bulk with TermDict.values_of."""
 
     __slots__ = ("_td",)
 
     def __init__(self, td: TermDict):
         self._td = td
-
-    def get(self, h, default=None):
-        v = self._td.get(int(h))
-        return default if v is None else v
-
-    def __getitem__(self, h):
-        v = self._td.get(int(h))
-        if v is None:
-            raise KeyError(h)
-        return v
 
     def __contains__(self, h) -> bool:
         return self._td.contains_hash(int(h))
@@ -930,12 +908,6 @@ class LocalTier:
         self._sem_lock = threading.Lock()
         self.queries_served = 0
 
-    def _values_of(self, keys: np.ndarray):
-        """(values object array, found mask) for sorted-or-not keys —
-        vectorized h2v.get over the TermDict. Missing hashes get
-        found=False (the distributed terms join drops them)."""
-        return self.terms.values_of(keys)
-
     @property
     def approx_bytes(self) -> int:
         """Driver-memory estimate for the byte-budget cap: quad columns
@@ -956,21 +928,34 @@ class LocalTier:
         """Column restricted to live rows (the identity pre-overlay)."""
         return col if self._live is None else col[self._live]
 
-    def _rows_mask(self, sorted_col, order, flat_col, keys: np.ndarray) -> np.ndarray:
-        """Boolean row mask: column value ∈ keys (sorted-index probe
-        over the base region + linear scan of the small unsorted
-        overlay tail, overlay-deleted rows off)."""
-        mask = np.zeros(self.nrows, dtype=bool)
+    def _rows_of(self, sorted_col, order, flat_col, keys: np.ndarray) -> np.ndarray:
+        """Live physical rows (unordered) whose column value ∈ keys:
+        sorted-index ranges over the base region + a linear scan of the
+        small unsorted overlay tail, overlay-deleted rows off.
+        O(k log n + hits + tail) — no corpus-sized mask."""
         if keys.size == 0:
-            return mask
+            return _EMPTY
         keys = np.unique(keys)
         lo = np.searchsorted(sorted_col, keys, "left")
         hi = np.searchsorted(sorted_col, keys, "right")
-        mask[order[_range_indices(lo, hi)]] = True
+        rows = order[_range_indices(lo, hi)]
         t0 = self._sorted_n
         if t0 < self.nrows:
-            mask[t0:] = np.isin(flat_col[t0:], keys)
-        return self._lv(mask)
+            tail = np.flatnonzero(np.isin(flat_col[t0:], keys)) + t0
+            rows = np.concatenate([rows, tail])
+        if self._live is not None:
+            rows = rows[self._live[rows]]
+        return rows
+
+    def _rows_mask(self, sorted_col, order, flat_col, keys: np.ndarray) -> np.ndarray:
+        """Boolean row mask over ``_rows_of``."""
+        mask = np.zeros(self.nrows, dtype=bool)
+        mask[self._rows_of(sorted_col, order, flat_col, keys)] = True
+        return mask
+
+    def _s_rows(self, keys: np.ndarray) -> np.ndarray:
+        """Live rows whose subject ∈ keys, in physical (stored) order."""
+        return np.sort(self._rows_of(self._s_sorted, self._s_order, self.s, keys))
 
     def _s_in(self, keys: np.ndarray) -> np.ndarray:
         return self._rows_mask(self._s_sorted, self._s_order, self.s, keys)
@@ -979,18 +964,25 @@ class LocalTier:
         """{subject: [object values]} — mirror of Engine.sp (reference
         query.py:38-57), rows in stored order like the collect it
         replaces."""
-        mask = self._s_in(self._hashes(s_list))
+        rows = self._s_rows(self._hashes(s_list))
         if p:
             ph = self.v2h.get(p)
-            mask = mask & (self.p == ph) if ph is not None else np.zeros(self.nrows, bool)
+            rows = rows[self.p[rows] == ph] if ph is not None else _EMPTY
+        n = rows.size
+        vals = self._decode_codes(np.concatenate([self.s[rows], self.o[rows]]))
         out: dict = {}
-        for i in np.flatnonzero(mask).tolist():
-            s_val = self.h2v.get(int(self.s[i]))
-            o_val = self.h2v.get(int(self.o[i]))
+        for s_val, o_val in zip(vals[:n], vals[n:]):
             if s_val is None or o_val is None:
                 continue
             out.setdefault(s_val, []).append(o_val)
         return out
+
+    def _decode_codes(self, codes: np.ndarray) -> list:
+        """Values (None when absent) for a code array with repeats —
+        each distinct hash decoded once, in one batched lookup."""
+        uniq, inv = np.unique(codes, return_inverse=True)
+        vals, _ = self.terms.values_of(uniq)
+        return vals[inv].tolist()
 
     def total_subjects(self) -> int:
         """Distinct-subject count (Engine.total's contract)."""
@@ -1080,9 +1072,9 @@ class LocalTier:
         ):
             # overlay terms in play (only between mutation and fold):
             # the rank order does not cover them — decode everything
-            sv, sf2 = self._values_of(s_h)
-            pv, pf2 = self._values_of(p_h)
-            ov, of2 = self._values_of(o_h)
+            sv, sf2 = self.terms.values_of(s_h)
+            pv, pf2 = self.terms.values_of(p_h)
+            ov, of2 = self.terms.values_of(o_h)
             ok = sf2 & pf2 & of2
             out = sorted(zip(sv[ok].tolist(), pv[ok].tolist(), ov[ok].tolist()))
             return out[start : start + size] if start else out[:size]
@@ -1155,7 +1147,7 @@ class LocalTier:
             first[1:] = (p[1:] != p[:-1]) | (s[1:] != s[:-1])
             up = p[first]
             pvals, counts = np.unique(up, return_counts=True)
-            vals, found = self._values_of(pvals)
+            vals, found = self.terms.values_of(pvals)
             rows = [
                 (v, int(c))
                 for v, c, h, f in zip(vals, counts, pvals.tolist(), found)
@@ -1177,7 +1169,7 @@ class LocalTier:
         first[1:] = (o[1:] != o[:-1]) | (s[1:] != s[:-1])
         uo = o[first]
         ovals, counts = np.unique(uo, return_counts=True)
-        vals, found = self._values_of(ovals)
+        vals, found = self.terms.values_of(ovals)
         return [
             (v, int(c)) for v, c, f in zip(vals, counts, found) if f
         ]
@@ -1699,8 +1691,7 @@ class LocalTier:
                     self._col_live(self.s) if gmask is None else self.s[gmask]
                 )
                 keyed = []
-                for h in subj.tolist():
-                    v = self.h2v.get(h)
+                for h, v in zip(subj.tolist(), self._decode_codes(subj)):
                     if v is None:
                         continue
                     k = int(
@@ -2120,7 +2111,7 @@ class LocalTier:
             subs = np.unique(self._s_sorted)
         else:  # overlay active: dead rows out, unsorted tail in
             subs = np.unique(self._col_live(self.s))
-        vals, found = self._values_of(subs)
+        vals, found = self.terms.values_of(subs)
         subs, svals = subs[found], vals[found]
         rows = []
         for s_, v_ in zip(subs.tolist(), svals.tolist()):
@@ -2409,6 +2400,50 @@ class LocalTier:
 
     # ---- the query() mirror -------------------------------------------
 
+    def _hydrate(self, page_vals: list, opts: dict) -> dict:
+        """The page's ``results`` ({subject: {"id", "graph", p: [o]}})
+        from its (hash, value) pairs: the page subjects' live rows come
+        from the sorted s-index (O(page rows)), one stable argsort puts
+        them in page order then physical row order, and every distinct
+        p/o/g hash decodes in one batched dictionary lookup. The page is
+        a slice of the distinct member set, so each subject hash has
+        exactly one page position."""
+        page = np.array([h for h, _ in page_vals], dtype=np.int64)
+        rows = self._s_rows(page)
+        only_p = opts.get("only_properties") or []
+        excl_p = opts.get("exclude_properties") or []
+        if only_p:
+            rows = rows[np.isin(self.p[rows], self._hashes(list(only_p)))]
+        elif excl_p:
+            hs = self._hashes(list(excl_p))
+            if hs.size:
+                rows = rows[~np.isin(self.p[rows], hs)]
+        uniq, first = np.unique(page, return_index=True)
+        pos = first[np.searchsorted(uniq, self.s[rows])]
+        order = np.argsort(pos, kind="stable")
+        rows, pos = rows[order], pos[order]
+        n = rows.size
+        vals = self._decode_codes(
+            np.concatenate([self.p[rows], self.o[rows], self.g[rows]])
+        )
+        page_sv = [v for _, v in page_vals]
+        results: dict = {}
+        for i, p_val, o_val, g_val in zip(
+            pos.tolist(), vals[:n], vals[n : 2 * n], vals[2 * n :]
+        ):
+            if p_val is None or o_val is None:
+                continue
+            sv = page_sv[i]
+            ent = results.get(sv)
+            if ent is None:
+                ent = results[sv] = {"id": sv, "graph": []}
+            objs = ent.setdefault(p_val, [])
+            if o_val not in objs:
+                objs.append(o_val)
+            if g_val and g_val not in ent["graph"]:
+                ent["graph"].append(g_val)
+        return results
+
     def try_query(self, engine, opts: dict, fts_max_rows: int) -> dict | None:
         """Serve the full reference query() response driver-side, or
         return None when any part needs the distributed path (mirror of
@@ -2503,31 +2538,7 @@ class LocalTier:
             page_hashes = [s_ for s_, _ in page_vals]
             hash_to_val = dict(page_vals)
             if page_hashes:
-                mask = self._s_in(np.array(page_hashes, dtype=np.int64))
-                only_p = opts.get("only_properties") or []
-                excl_p = opts.get("exclude_properties") or []
-                if only_p:
-                    mask &= np.isin(self.p, self._hashes(list(only_p)))
-                elif excl_p:
-                    hs = self._hashes(list(excl_p))
-                    if hs.size:
-                        mask &= ~np.isin(self.p, hs)
-                idx = np.flatnonzero(mask)
-                pos = {h: i for i, h in enumerate(page_hashes)}
-                ordered_idx = sorted(idx.tolist(), key=lambda i: pos[int(self.s[i])])
-                for i in ordered_idx:
-                    sv = hash_to_val[int(self.s[i])]
-                    p_val = self.h2v.get(int(self.p[i]))
-                    o_val = self.h2v.get(int(self.o[i]))
-                    if p_val is None or o_val is None:
-                        continue
-                    g_val = self.h2v.get(int(self.g[i]))
-                    ent = results.setdefault(sv, {"id": sv, "graph": []})
-                    ent.setdefault(p_val, [])
-                    if o_val not in ent[p_val]:
-                        ent[p_val].append(o_val)
-                    if g_val and g_val not in ent["graph"]:
-                        ent["graph"].append(g_val)
+                results = self._hydrate(page_vals, opts)
                 # paths chains: reuse the engine's driver-local walk
                 # (zero jobs once the hierarchy map is built); larger
                 # hierarchies fall back to the distributed walk exactly
@@ -2566,12 +2577,10 @@ class LocalTier:
                             [(h,) for h in page_hashes], "s long"
                         )
                         pcol = engine.paths(subj_df, str(pad)).collect()
-                    av = {}
-                    for r_ in pcol:
-                        h_ = r_["ancestor"]
-                        v_ = self.h2v.get(h_)
-                        if v_ is not None:
-                            av[h_] = v_
+                    anc = [r_["ancestor"] for r_ in pcol]
+                    av = dict(
+                        zip(anc, self._decode_codes(np.array(anc, dtype=np.int64)))
+                    )
                     chains: dict = {}
                     for r_ in pcol:
                         a_val = av.get(r_["ancestor"])

@@ -4357,10 +4357,9 @@ class Engine:
                         breaks = np.nonzero(np.diff(pos) > 1)[0] + 1
                         for seg in np.split(pos, breaks):
                             a, b = int(seg[0]), int(seg[-1]) + 1
-                            ord_[a:b] = sorted(
-                                ord_[a:b].tolist(),
-                                key=lambda j: td.get(int(hs_all[j])),
-                            )
+                            run = ord_[a:b]
+                            rvals, _ = td.values_of(hs_all[run])
+                            ord_[a:b] = run[np.argsort(rvals, kind="stable")]
                     if size:
                         sel = ord_[start : start + size]
                         ph = hs_all[sel]

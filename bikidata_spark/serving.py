@@ -218,7 +218,9 @@ class Serving:
                 with open(seq_file) as f:
                     self._journal_seq = max(self._journal_seq, int(f.read().strip()))
         self._pool = ThreadPoolExecutor(
-            max_workers=num_workers, thread_name_prefix="bikidata-serve"
+            max_workers=num_workers,
+            thread_name_prefix="bikidata-serve",
+            initializer=self._pin_scheduler_pool,
         )
         self._cache: dict[str, tuple[float, str]] = {}
         self._cache_lock = threading.Lock()
@@ -275,17 +277,23 @@ class Serving:
                 self._queries_served += 1
                 self._completed += 1
 
-    def _query_inner(self, opts: dict) -> dict:
-        # one scheduler pool per worker thread: under
-        # spark.scheduler.mode=FAIR (BIKIDATA_SPARK_SCHEDULER=FAIR)
-        # concurrent queries share executors round-robin. Spark Connect
-        # has no SparkContext — pools are a classic-session refinement,
-        # not a correctness requirement, so degrade silently there.
+    def _pin_scheduler_pool(self) -> None:
+        """Worker-thread initializer: one scheduler pool per worker
+        thread, named after it. Under spark.scheduler.mode=FAIR
+        (BIKIDATA_SPARK_SCHEDULER=FAIR) concurrent queries then share
+        executors round-robin. The property is thread-local and a
+        worker's name never changes, so it is set once per thread, not
+        per request: a tier-served read makes no JVM call at all. Spark
+        Connect has no SparkContext — pools are a classic-session
+        refinement, not a correctness requirement, so degrade silently
+        there (an initializer that raised would break the pool)."""
         try:
             sc = self.engine.graph.spark.sparkContext
             sc.setLocalProperty("spark.scheduler.pool", threading.current_thread().name)
         except Exception:
             pass
+
+    def _query_inner(self, opts: dict) -> dict:
         query_hash = hashlib.md5(
             json.dumps(opts, sort_keys=True).encode("utf8")
         ).hexdigest()
@@ -363,11 +371,11 @@ class Serving:
         by a memory knob). ``BIKIDATA_SPARK_DIST_PERMITS`` overrides
         (0 disables the gate). Otherwise: usable execution memory —
         ``spark.memory.fraction`` (0.6) of the JVM heap minus the 300 MB
-        reserve — divided by a per-query footprint estimated as a
-        measured fraction (``BIKIDATA_SPARK_DIST_QUERY_FRACTION``,
-        default 1/10 — calibrated on the r14 sf10 over-cap sweep where
-        ~7 concurrent 111M-quad queries saturated a 4.6 GiB budget) of
-        the corpus's optimizer size estimate, clamped to
+        reserve — divided by a per-query footprint: the corpus's
+        optimizer size estimate divided by
+        ``BIKIDATA_SPARK_DIST_QUERY_FRACTION`` (default
+        ``_DIST_QUERY_EST_FRACTION`` = 1, so the whole estimate; see
+        the sf10 calibration note at its definition), clamped to
         [64 MB, 4 GB]. Clamped to [1, num_workers]."""
         import os
 

@@ -300,3 +300,73 @@ def test_dist_admission_control(spark, monkeypatch):
     )["total"] == 3
     assert srv2.status()["dist_admission"]["engaged"] is False
     srv2.close()
+
+
+def test_tier_reads_skip_the_jvm_and_fair_pools_hold(spark, monkeypatch):
+    """The scheduler pool is pinned once per worker thread, so
+    tier-served reads through Serving send no py4j command at all, and
+    a distributed read still runs every stage in its worker thread's
+    pool. A FAIR scheduler places a job by that same job property
+    (spark.scheduler.pool), so the test session's FIFO scheduler shows
+    it without a second JVM."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    graph = build_from_iterator(spark, TRIPLES).cache()
+    eng = Engine(graph)
+    assert eng._local_tier() is not None
+    # one worker: its initializer runs on the first read, never later
+    srv = Serving(eng, num_workers=1)
+    opts = [
+        {"filters": [{"p": "<p/name>", "o": f'"{v}"'}], "use_cache": False}
+        for v in ("alpha", "beta", "gamma")
+    ]
+    asyncio.run(srv.query_async(opts[0]))
+    served = eng._local_tier().queries_served
+    # release the Java objects earlier work left in reference cycles
+    # now: py4j sends a memory command for each when Python's collector
+    # gets to it, which could otherwise land inside the counted reads
+    gc.collect()
+    sent = []
+    inner = ClientServerConnection.send_command
+
+    def counted(self, command):
+        sent.append(command)
+        return inner(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+
+    async def reads():
+        return [await srv.query_async(o) for o in opts * 10]
+
+    rs = asyncio.run(reads())
+    monkeypatch.undo()
+    srv.close()
+    assert eng._local_tier().queries_served == served + 30  # all tier-served
+    assert [list(r["results"]) for r in rs[:3]] == [["<e/1>"], ["<e/2>"], ["<e/3>"]]
+    assert sent == [], sent[:3]
+
+    plain = Engine(graph, local_tier_rows=0)
+    assert plain._local_tier() is None  # every read runs Spark jobs
+    srv = Serving(plain, num_workers=2)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    dist = {"filters": [{"p": "<p/name>"}], "aggregates": ["<p/name>"],
+            "size": 2, "use_cache": False}
+    assert asyncio.run(srv.query_async(dist, timeout=120))["total"] == 3
+    workers = {t.name for t in srv._pool._threads}
+    srv.close()
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    pools = []
+    for jid in sorted(set(tracker.getJobIdsForGroup(None)) - before):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            st = jsc.statusStore().lastStageAttempt(sid)
+            # a skipped stage (shuffle output reused) was never
+            # submitted, so it carries no pool of its own
+            if st.status().toString() != "SKIPPED":
+                pools.append(st.schedulingPool())
+    assert pools, "the distributed read ran no stage"
+    assert set(pools) <= workers, (pools, workers)

@@ -22,13 +22,29 @@ and a worktree of the old commit on a quiet host:
 Interleaving controls for host drift; each invocation is a fresh JVM.
 With no section arguments the original three RDF sections run
 (q_build_index, q_boolean_filter, q_property_hop).
+
+``--perfbench`` mode A/Bs the repo benchmark (perfbench/run.py)
+instead: it alternates ``perfbench/run.py --workload W --seed S``
+between a parent and a change checkout, one pair per seed, swapping
+which side runs first on every pair, then prints each end-to-end
+metric's per-side median and quartiles and how many pairs the change
+won (ties count for neither side). A gain holds when the change wins
+at least nine tenths of the pairs and the medians differ by more than
+the parent's interquartile spread. Every run lasts BENCHMARK.json's
+``run_seconds`` on both sides; ``--jsonl`` appends every run's result
+line:
+
+    python tools/bench_ab.py --perfbench PARENT CHANGE \
+        --workload serve_tier --seeds 101-110 --jsonl ab.jsonl
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
+import subprocess
 import sys
 import time
 
@@ -52,7 +68,106 @@ NT_SECTIONS = ("q_nt_ingest", "q_nt_ingest_bz2")
 SERVE_SECTIONS = ("q_serving_mutations", "q_serving_mixed")
 
 
+def _seeds(spec: str) -> list[int]:
+    """'101-110' or '101,105,107' -> seeds."""
+    out: list[int] = []
+    for part in spec.split(","):
+        lo, _, hi = part.partition("-")
+        out.extend(range(int(lo), int(hi or lo) + 1))
+    return out
+
+
+def _perfbench_run(root: str, workload: str, seed: int, seconds: float, trace: int) -> dict:
+    """One benchmark run in ``root``; its last stdout line (the result)."""
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
+    out = subprocess.run(cmd, cwd=root, capture_output=True, text=True, check=True)
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def _quartiles(vals: list[float]) -> tuple[float, float, float]:
+    if len(vals) < 2:
+        return vals[0], vals[0], vals[0]
+    q1, q2, q3 = statistics.quantiles(vals, n=4)
+    return q1, q2, q3
+
+
+def summarize(runs: list[dict], better: dict[str, str]) -> dict:
+    """Per metric: each side's median and quartiles, the pair wins of
+    the change (pairs matched by seed; ties count for neither), and
+    whether the gain rule holds."""
+    sides = {"parent": {}, "change": {}}
+    for r in runs:
+        sides[r["side"]][r["seed"]] = r
+    seeds = sorted(set(sides["parent"]) & set(sides["change"]))
+    out: dict = {"pairs": len(seeds), "failed": {
+        side: sum(sides[side][s]["failed"] for s in seeds) for side in sides}, "metrics": {}}
+    if not seeds:
+        return out
+    for name in sides["parent"][seeds[0]]["metrics"]:
+        sign = -1.0 if better.get(name, "lower") == "lower" else 1.0
+        vals = {side: [sides[side][s]["metrics"][name]["value"] for s in seeds]
+                for side in sides}
+        wins = sum(sign * (c - p) > 0 for p, c in zip(vals["parent"], vals["change"]))
+        losses = sum(sign * (c - p) < 0 for p, c in zip(vals["parent"], vals["change"]))
+        (pq1, pm, pq3), (cq1, cm, cq3) = (_quartiles(vals[side]) for side in sides)
+        out["metrics"][name] = {
+            "unit": sides["parent"][seeds[0]]["metrics"][name]["unit"],
+            "parent": {"median": pm, "q1": pq1, "q3": pq3},
+            "change": {"median": cm, "q1": cq1, "q3": cq3},
+            "delta": (cm - pm) / pm if pm else 0.0,
+            "wins": wins, "losses": losses,
+            "gain": wins >= 0.9 * len(seeds) and sign * (cm - pm) > pq3 - pq1,
+            "pairs": [[s, p, c] for s, p, c in zip(seeds, vals["parent"], vals["change"])],
+        }
+    return out
+
+
+def _print_summary(workload: str, summ: dict) -> None:
+    print(f"{workload}: {summ['pairs']} pairs, failed parent/change "
+          f"{summ['failed']['parent']}/{summ['failed']['change']}")
+    for name, m in summ["metrics"].items():
+        p, c = m["parent"], m["change"]
+        print(f"  {name} [{m['unit']}]: parent {p['median']:.4g} [{p['q1']:.4g}, {p['q3']:.4g}]"
+              f"  change {c['median']:.4g} [{c['q1']:.4g}, {c['q3']:.4g}]"
+              f"  {m['delta']:+.1%}  wins {m['wins']}/{summ['pairs']}"
+              f"  parent IQR {p['q3'] - p['q1']:.4g}  gain={m['gain']}")
+    print(json.dumps({"workload": workload, **summ}))
+
+
+def perfbench_main(argv: list[str]) -> None:
+    ap = argparse.ArgumentParser(prog="bench_ab.py --perfbench")
+    ap.add_argument("parent")
+    ap.add_argument("change")
+    ap.add_argument("--workload", default="serve_tier")
+    ap.add_argument("--seeds", default="101-110")
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--jsonl", help="append every run's result line here")
+    a = ap.parse_args(argv)
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    bench = json.load(open(os.path.join(here, "BENCHMARK.json")))
+    better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
+    roots = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    runs = []
+    for i, seed in enumerate(_seeds(a.seeds)):
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        for side in order:
+            res = _perfbench_run(roots[side], a.workload, seed, bench["run_seconds"], a.trace)
+            rec = {"workload": a.workload, "side": side, "seed": seed,
+                   "first": side == order[0], "trace": a.trace, **res}
+            runs.append(rec)
+            if a.jsonl:
+                with open(a.jsonl, "a") as f:
+                    f.write(json.dumps(rec) + "\n")
+            print(f"seed {seed} {side}: " + ", ".join(
+                f"{k}={v['value']:.4g}" for k, v in res["metrics"].items()), file=sys.stderr)
+    _print_summary(a.workload, summarize(runs, better))
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--perfbench"]:
+        perfbench_main(sys.argv[2:])
+        return
     args = [a for a in sys.argv[1:]]
     root = os.path.abspath(args[0]) if args else os.path.abspath(".")
     sections = args[1:] or list(RDF_SECTIONS)
