@@ -308,11 +308,15 @@ def write_graph(
             .parquet(f"{path}/triples_by_s")
         )
     if mode == "overwrite":
-        n_triples = graph.triples.count()
-        row = graph.terms.agg(
-            F.count("*").alias("n"),
-            F.sum(F.octet_length("value")).alias("b"),
-        ).first()
+        # from the files just written: the graph's own frames would
+        # re-run its whole lineage (parse, shuffles, distinct) twice
+        spark = graph.spark
+        n_triples = spark.read.parquet(f"{path}/triples").count()
+        row = (
+            spark.read.parquet(f"{path}/terms")
+            .agg(F.count("*").alias("n"), F.sum(F.octet_length("value")).alias("b"))
+            .first()
+        )
         _write_store_manifest(
             path,
             {

@@ -1397,36 +1397,12 @@ class LocalTier:
 
     # ---- FTS mirror ----------------------------------------------------
 
-    def _local_fts(self, engine, max_rows: int):
+    def _local_fts(self, engine, max_rows: int, no_spark: bool):
         """Build (once per FtsIndex) the driver-side postings mirror, or
-        None when the index is over-cap / an old normalized store."""
-        if getattr(engine, "_frozen", False):
-            # forked read-only worker (serving_pool): touching engine.fts
-            # could BUILD the index — a Spark job the child process must
-            # never schedule. Serve the mirror only if it is resident and
-            # keyed to the already-built index (or loaded from the tier
-            # artifact with no index built); otherwise bail to the
-            # parent process (None → _BAIL upstream).
-            st = self._fts_state
-            if st is not None and st[1] is not None:
-                if engine._fts is not None and st[0] is engine._fts:
-                    return st[1]
-                if st[0] is ARTIFACT_FTS and engine._fts is None:
-                    # same stem/strip env check as the parent ARTIFACT_FTS
-                    # path below: if BIKIDATA_FTS_SETTINGS asks for a
-                    # different tokenization than the artifact was built
-                    # with, the child must NOT serve it — bail to the
-                    # parent (env read only; schedules no Spark work).
-                    from ..operators.fts import fts_settings_from_env
-
-                    s = fts_settings_from_env()
-                    lf = st[1]
-                    if (
-                        lf.stem == (s.get("stemmer") == "porter")
-                        and lf.strip == bool(s.get("strip_accents", 1))
-                    ):
-                        return lf
-            return None
+        None when the index is over-cap / an old normalized store.
+        ``no_spark`` (forked worker, event-loop read) serves only a
+        mirror already resident for the current index and returns None
+        wherever this call would build the index or the mirror."""
         st = self._fts_state
         if st is not None and st[0] is ARTIFACT_FTS and st[1] is not None:
             # mirror loaded from the persisted tier artifact (r11):
@@ -1449,11 +1425,17 @@ class LocalTier:
                     and lf.strip == bool(s.get("strip_accents", 1))
                 ):
                     return lf
-            elif engine._fts.stem == lf.stem and engine._fts.strip == lf.strip:
+            elif (
+                not no_spark  # _fts_lock is held across a mirror build
+                and engine._fts.stem == lf.stem
+                and engine._fts.strip == lf.strip
+            ):
                 with self._fts_lock:
                     if self._fts_state is st:
                         self._fts_state = (engine._fts, lf)
                 return lf
+        if no_spark:
+            return st[1] if st is not None and st[0] is engine._fts else None
         index = engine.fts  # builds the in-memory index if absent — the
         # distributed path would equally pay this one-time build
         st = self._fts_state
@@ -1558,21 +1540,13 @@ class LocalTier:
 
     # ---- semantic mirror -----------------------------------------------
 
-    def _local_semantic(self, engine):
-        if getattr(engine, "_frozen", False):
-            # forked worker: pre-built mirror or bail (building collects)
-            st = self._sem_state
-            if (
-                st is not None
-                and st[0] is engine._ivf
-                and st[1] is engine.embeddings
-            ):
-                return st[2]
-            return None
+    def _local_semantic(self, engine, no_spark: bool = False):
         # identity-keyed (DataFrame __eq__ builds a Column, so no ==)
         st = self._sem_state
         if st is not None and st[0] is engine._ivf and st[1] is engine.embeddings:
             return st[2]
+        if no_spark:
+            return None  # building collects the vectors
         with self._sem_lock:
             st = self._sem_state
             if (
@@ -1631,11 +1605,11 @@ class LocalTier:
         M = np.array(pdf["vec"].tolist(), dtype=np.float64)
         return _LocalSemantic("brute", dim, s_arr, M)
 
-    def _semantic_members(self, engine, q: dict, o: str, gmask):
+    def _semantic_members(self, engine, q: dict, o: str, gmask, no_spark: bool):
         """Mirror of plans/query._semantic_filter → (subjects, scores)."""
         if engine._ivf is None and engine.embeddings is None:
             return _BAIL  # the distributed path raises the contract error
-        sem = self._local_semantic(engine)
+        sem = self._local_semantic(engine, no_spark)
         if sem is None:
             return _BAIL
         qvec = q.get("vector")
@@ -1665,7 +1639,7 @@ class LocalTier:
 
     # ---- one filter → (subjects, scores|None) --------------------------
 
-    def _filter_members(self, engine, q: dict, fts_max_rows: int):
+    def _filter_members(self, engine, q: dict, fts_max_rows: int, no_spark: bool):
         """Mirror of plans/query.Engine.filter_subjects for one filter.
         Returns (subjects ndarray, score dict|None), None when the
         engine would skip the filter, or _BAIL for the distributed
@@ -1712,10 +1686,10 @@ class LocalTier:
             return _BAIL  # Java vs Python regex dialects
 
         if p_head == "semantic":
-            return self._semantic_members(engine, q, o, gmask)
+            return self._semantic_members(engine, q, o, gmask, no_spark)
 
         if p_head == "fts":
-            lf = self._local_fts(engine, fts_max_rows)
+            lf = self._local_fts(engine, fts_max_rows, no_spark)
             if lf is None:
                 return _BAIL
             lits, lscores = lf.match(o)
@@ -1757,7 +1731,7 @@ class LocalTier:
 
     # ---- filter algebra (mirror of _subjects_uncached) -----------------
 
-    def _members(self, engine, opts: dict, fts_max_rows: int):
+    def _members(self, engine, opts: dict, fts_max_rows: int, no_spark: bool):
         """→ (members set|None, scores dict|None) or _BAIL."""
         groups: list[list[int]] = []
         excepts: list[int] = []
@@ -1766,7 +1740,7 @@ class LocalTier:
         n_tags = 0
         for q in opts.get("filters", []):
             op = q.get("op", "should")
-            r = self._filter_members(engine, q, fts_max_rows)
+            r = self._filter_members(engine, q, fts_max_rows, no_spark)
             if r is _BAIL:
                 return _BAIL
             if r is None:
@@ -2444,15 +2418,24 @@ class LocalTier:
                 ent["graph"].append(g_val)
         return results
 
-    def try_query(self, engine, opts: dict, fts_max_rows: int) -> dict | None:
+    def try_query(
+        self, engine, opts: dict, fts_max_rows: int, no_spark: bool = False
+    ) -> dict | None:
         """Serve the full reference query() response driver-side, or
         return None when any part needs the distributed path (mirror of
-        plans/query.Engine._query_impl)."""
+        plans/query.Engine._query_impl).
+
+        ``no_spark`` also returns None wherever serving would schedule
+        Spark work: building the fts or semantic mirror, probing a
+        hierarchy map, or walking paths distributed. A forked worker
+        (serving_pool) must never touch the py4j gateway it inherited,
+        and an event-loop read (Serving.query_async) must not block on
+        a Spark job; both hand such a request to a caller that may."""
         size, start = _parse_size_start(opts)
         order_rules = _normalize_order_rules(opts.get("order"))
         if order_rules and not self._order_supported(order_rules[0]):
             return None
-        r = self._members(engine, opts, fts_max_rows)
+        r = self._members(engine, opts, fts_max_rows, no_spark)
         if r is _BAIL:
             return None
         members, scores = r
@@ -2543,13 +2526,13 @@ class LocalTier:
                 # (zero jobs once the hierarchy map is built); larger
                 # hierarchies fall back to the distributed walk exactly
                 # like _query_impl
-                frozen = getattr(engine, "_frozen", False)
                 for pad in opts.get("paths", []):
-                    if frozen:
-                        # forked worker: only a map already collected at
-                        # fork time is usable — a miss would schedule a
-                        # Spark probe, an over-cap (None) map the
-                        # distributed walk. Both bail to the parent.
+                    if no_spark:
+                        # only a map already built for this generation:
+                        # a build reads the engine's tier state, which a
+                        # forked worker holds as of the fork, or probes
+                        # Spark; an over-cap (None) map means the
+                        # distributed walk
                         with engine._cache_lock:
                             lmap = engine._paths_edge_maps.get(
                                 (engine._graph_generation, str(pad)), _BAIL
@@ -2563,8 +2546,8 @@ class LocalTier:
                         if lmap is not None
                         else None
                     )
-                    if lrows is None and frozen:
-                        return None  # DAG blowup → distributed walk → parent
+                    if lrows is None and no_spark:
+                        return None  # DAG blowup → distributed walk
                     if lrows is not None:
                         pcol = [
                             {"src": s_, "pos": p_, "ancestor": a_}

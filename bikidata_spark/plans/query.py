@@ -546,11 +546,6 @@ class Engine:
     )
     _dead_literals: int = field(default=0, repr=False)
     _terms_shed: int = field(default=0, repr=False)
-    # forked read-only serving worker (serving_pool): every path that
-    # would cross into Spark/py4j — the child inherited the JVM gateway
-    # socket but must never use it — bails to the parent process instead
-    # (local_tier checks this before building mirrors / walking paths)
-    _frozen: bool = field(default=False, repr=False)
     # the last successful tier patch, for serving_pool to replay into
     # its forked workers: {"ins": [(s,p,o,g)], "del": ndarray,
     # "terms": [(hash, value)], "fts": "keep"|"drop"|("rows", rows,
@@ -4117,6 +4112,25 @@ class Engine:
             # everything the response needed is already collected or
             # checkpointed by now
             self._release_transients()
+
+    def query_resident(self, opts: dict) -> dict | None:
+        """``query(opts)`` answered by the tier already resident for the
+        current generation, or None when answering needs Spark: no tier
+        built yet (this never builds one), an over-cap or disabled tier,
+        or a request the tier serves only by building a mirror or
+        running a job (LocalTier.try_query ``no_spark``). A caller that
+        must not block on Spark (Serving's event loop) hands a None to
+        :meth:`query`."""
+        st = self._local_tier_state
+        if (
+            self.local_tier_rows <= 0
+            or st is None
+            or st[0] != self._graph_generation
+            or st[1] is None
+        ):
+            return None
+        tier = st[1]
+        return tier.try_query(self, opts, self._fts_mirror_rows(tier), no_spark=True)
 
     def _query_impl(self, opts: dict) -> dict:
         size, start = _parse_size_start(opts)

@@ -20,9 +20,10 @@ semantics:
   reference routes inserts/deletes through the single manager
   process, reference workers.py:45-56)
 
-All functions are asyncio coroutines like the reference's; they wrap
-the blocking Spark call with ``run_in_executor`` on the instance's
-thread pool.
+All functions are asyncio coroutines like the reference's. Mutations
+and reads that need Spark run on the instance's thread pool
+(``run_in_executor``); a read the result cache or the resident tier
+answers runs on the caller's event loop (see ``query_async``).
 """
 
 from __future__ import annotations
@@ -233,6 +234,8 @@ class Serving:
         self._completed = 0  # work items finished (success or error)
         self._in_flight = 0  # currently executing on a worker thread
         self._queries_served = 0
+        self._inline_reads = 0  # answered on the caller's event loop
+        self._pooled_reads = 0  # handed to the thread pool
         self._cache_hits = 0
         self._cache_misses = 0
         self._mutations_applied = 0
@@ -262,11 +265,17 @@ class Serving:
         self._mutate_lock = threading.Lock()
 
     # ---- queries -------------------------------------------------------
-    def _query_blocking(self, opts: dict) -> dict:
+    def _query_blocking(self, opts: dict, no_spark: bool = False) -> dict | None:
+        """One read, counted. ``no_spark`` (the event-loop attempt)
+        returns None for a read that needs Spark; that read is not
+        counted here, since the pooled retry counts it."""
         with self._cache_lock:
             self._in_flight += 1
+        done = True
         try:
-            return self._query_inner(opts)
+            result = self._query_inner(opts, no_spark)
+            done = result is not None
+            return result
         except Exception:
             with self._cache_lock:
                 self._errors += 1
@@ -274,8 +283,11 @@ class Serving:
         finally:
             with self._cache_lock:
                 self._in_flight -= 1
-                self._queries_served += 1
-                self._completed += 1
+                if done:
+                    self._queries_served += 1
+                    self._completed += 1
+                    if no_spark:
+                        self._inline_reads += 1
 
     def _pin_scheduler_pool(self) -> None:
         """Worker-thread initializer: one scheduler pool per worker
@@ -293,7 +305,7 @@ class Serving:
         except Exception:
             pass
 
-    def _query_inner(self, opts: dict) -> dict:
+    def _query_inner(self, opts: dict, no_spark: bool = False) -> dict | None:
         query_hash = hashlib.md5(
             json.dumps(opts, sort_keys=True).encode("utf8")
         ).hexdigest()
@@ -306,14 +318,19 @@ class Serving:
                     return json.loads(hit[1])
         received = time.time()
         with self._cache_lock:
-            self._cache_misses += 1
             generation = self._generation
         result = None
         pool = self._proc_pool
         if pool is not None and pool.alive:
+            if no_spark:
+                return None  # the forked workers serve tier reads outside this GIL
             # worker round-trip outside the GIL; None = tier bail or a
             # worker failure — the in-process path below covers both
             result = pool.query(opts)
+        elif no_spark:
+            result = self.engine.query_resident(opts)
+            if result is None:
+                return None  # needs Spark: the pooled retry counts the miss
         if result is None:
             sem = self._dist_gate()
             if sem is not None:
@@ -336,10 +353,10 @@ class Serving:
         # non-JSON values stringified) — the Redis behavior
         payload = json.dumps(result, default=str)
         result = json.loads(payload)
-        if use_cache:
-            with self._cache_lock:
-                if self._generation == generation:  # no swap mid-query
-                    self._cache[query_hash] = (time.time() + CACHE_TTL_S, payload)
+        with self._cache_lock:
+            self._cache_misses += 1
+            if use_cache and self._generation == generation:  # no swap mid-query
+                self._cache[query_hash] = (time.time() + CACHE_TTL_S, payload)
         return result
 
     def _dist_gate(self):
@@ -412,10 +429,27 @@ class Serving:
         return max(1, min(self._num_workers, usable // per_q))
 
     async def query_async(self, opts: dict, timeout: int = 60) -> dict:
-        loop = asyncio.get_running_loop()
+        """Answer a read. A read that needs no Spark — a result-cache
+        hit, or one the resident tier answers — runs right here on the
+        event-loop thread: it is GIL-bound numpy work, so a pool thread
+        would add a handoff and no parallelism. Any other read (a tier
+        decline, an over-cap engine, a tier not yet built for this
+        generation, a live proc pool) goes to the thread pool."""
+        opts = dict(opts)
         with self._cache_lock:
             self._submitted += 1
-        fut = loop.run_in_executor(self._pool, self._query_blocking, dict(opts))
+        t0 = time.perf_counter()
+        result = self._query_blocking(opts, no_spark=True)
+        if result is not None:
+            elapsed = time.perf_counter() - t0
+            await asyncio.sleep(0)  # let the loop's other tasks run
+            if timeout is not None and elapsed > timeout:
+                raise TimeoutError("Query timed out")
+            return result
+        with self._cache_lock:
+            self._pooled_reads += 1
+        loop = asyncio.get_running_loop()
+        fut = loop.run_in_executor(self._pool, self._query_blocking, opts)
         try:
             return await asyncio.wait_for(fut, timeout=timeout)
         except asyncio.TimeoutError:
@@ -686,7 +720,9 @@ class Serving:
         ``queue_depth`` counts submitted-but-not-yet-finished work items
         beyond the ones currently executing (the Redis list length
         analogue); ``in_flight`` is what the worker threads are running
-        right now.
+        right now. ``routes`` counts reads answered on the caller's
+        event loop (``inline``) and reads handed to the thread pool
+        (``pool``).
         """
         now = time.time()
         with self._cache_lock:
@@ -697,6 +733,7 @@ class Serving:
                 "queue_depth": max(0, self._submitted - self._completed - self._in_flight),
                 "in_flight": self._in_flight,
                 "queries_served": self._queries_served,
+                "routes": {"inline": self._inline_reads, "pool": self._pooled_reads},
                 "mutations_applied": self._mutations_applied,
                 "errors": self._errors,
                 "generation": self._generation,

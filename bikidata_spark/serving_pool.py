@@ -28,9 +28,10 @@ Protocol (one duplex pipe per worker, strictly request/response):
 - ``("x", None)``  → ``("bye", None)`` and the worker exits.
 
 The forked child inherits the py4j gateway socket but MUST NOT use it:
-``engine._frozen = True`` makes every Spark-needing path inside
-``try_query`` bail to the parent instead (plans/local_tier.py guards
-on ``_local_fts`` / ``_local_semantic`` / the paths walk).
+it calls ``try_query(..., no_spark=True)``, so every Spark-needing path
+(building the fts or semantic mirror, a paths map miss, the
+distributed paths walk) bails to the parent instead — the same rule
+Serving's event-loop reads follow in the parent.
 
 Mutation consistency: every broadcast bumps the pool EPOCH; a worker
 re-enters the idle rotation only after acking the current epoch's
@@ -102,7 +103,6 @@ def _child_main(conn, engine, fts_max_rows: int) -> None:
     import os
 
     gc.freeze()  # inherited objects: don't let GC touch their pages
-    engine._frozen = True
     st = engine._local_tier_state
     tier = st[1] if st is not None else None
     while True:
@@ -116,7 +116,9 @@ def _child_main(conn, engine, fts_max_rows: int) -> None:
                 if tier is None:
                     conn.send(("r", None))
                     continue
-                conn.send(("r", tier.try_query(engine, payload, fts_max_rows)))
+                conn.send(
+                    ("r", tier.try_query(engine, payload, fts_max_rows, no_spark=True))
+                )
             elif kind == "m":
                 # hierarchy maps first: delete indexes address the
                 # pre-patch tier arrays

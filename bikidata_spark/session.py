@@ -135,6 +135,11 @@ def get_spark(app_name: str = "bikidata-spark", shuffle_partitions: int | None =
             os.environ.get("BIKIDATA_SPARK_MAX_RESULT", "4g"),
         )
         .config("spark.ui.enabled", "false")
+        # PySpark otherwise records the Python call site of every Column
+        # method: ~13 py4j round trips per op plus an IPython import
+        # attempt (pyspark errors/utils.py _with_origin). DataFrame
+        # errors then lose that Python call-site context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

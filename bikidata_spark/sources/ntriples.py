@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..session import ensure_parallelism
+
 _decode_cache = []
 
 
@@ -85,11 +87,15 @@ def parse_nt_lines(lines: DataFrame, fan_out: int | None = None) -> DataFrame:
     - gzip dump parts are not splittable; a dump with one big .gz
       member parses single-threaded no matter how many cores exist.
       The optional ``fan_out`` repartition spreads the array rows to
-      the session's parallelism before the s/p/o projection.
+      ``fan_out`` partitions before the s/p/o projection, only when the
+      input arrives in fewer splits (``ensure_parallelism``): a dump
+      already that wide parses in place, and one with more splits
+      keeps them.
 
     Streaming-safe: stateless expressions + repartition both compose
-    with readStream. Pass ``fan_out=None`` to skip the exchange when a
-    later stage shuffles immediately anyway."""
+    with readStream (a streaming frame always takes the repartition).
+    Pass ``fan_out=None`` to skip the exchange when a later stage
+    shuffles immediately anyway."""
     pre = _nt_token_arrays(lines, fan_out)
     return (
         pre.filter(F.size("arr") >= 3)
@@ -117,7 +123,7 @@ def _nt_token_arrays(lines: DataFrame, fan_out: int | None) -> DataFrame:
         )
     )
     if fan_out:
-        pre = pre.repartition(fan_out)
+        pre = ensure_parallelism(pre, min_partitions=fan_out)
     return pre
 
 

@@ -48,9 +48,29 @@ def test_concurrent_queries(serving):
     assert [list(r["results"]) for r in rs] == [["<e/1>"], ["<e/2>"], ["<e/3>"]]
 
 
-def test_query_timeout(serving):
+@pytest.mark.parametrize("route", ["pool", "inline"])
+def test_query_timeout(serving, route, monkeypatch):
+    """A read that outlasts its timeout raises TimeoutError on either
+    route: a pooled one (a fresh engine builds its tier first) is
+    abandoned by the wait, an inline one is checked once answered."""
+    import time
+
+    from bikidata_spark.plans.local_tier import LocalTier
+
+    opts = {"filters": [{"p": "<p/name>", "o": '"alpha"'}], "use_cache": False}
+    if route == "inline":
+        serving.engine.query(dict(opts))  # tier resident: the read runs inline
+        inner = LocalTier.try_query
+
+        def slow(self, *args, **kwargs):
+            time.sleep(0.05)
+            return inner(self, *args, **kwargs)
+
+        monkeypatch.setattr(LocalTier, "try_query", slow)
     with pytest.raises(TimeoutError):
-        asyncio.run(serving.query_async({"filters": [{"p": "<p/name>", "o": '"alpha"'}], "use_cache": False}, timeout=0.001))
+        asyncio.run(serving.query_async(opts, timeout=0.001))
+    routes = serving.status()["routes"]
+    assert routes == ({"inline": 1, "pool": 0} if route == "inline" else {"inline": 0, "pool": 1})
 
 
 def test_insert_then_delete_roundtrip(serving):
@@ -101,7 +121,14 @@ def test_serving_under_mutation_stress(serving):
         final = await serving.query_async(q)
         return results, set(final["results"])
 
-    results, final = asyncio.run(go())
+    import sys
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the loop thread and the pool
+    try:
+        results, final = asyncio.run(go())
+    finally:
+        sys.setswitchinterval(interval)
     # every observed state is one of the legal snapshots
     legal = [set(), {"<e/4>"}, {"<e/5>"}]
     assert all(r in legal for r in results), results
@@ -112,6 +139,11 @@ def test_serving_under_mutation_stress(serving):
         serving.query_async({"filters": [{"p": "<p/name>", "o": '"delta"'}]})
     )
     assert set(cached["results"]) == {"<e/5>"}
+    # no lost update between reads on the event loop and work on the pool
+    st = serving.status()
+    assert st["queries_served"] == 10 and st["mutations_applied"] == 3
+    assert st["routes"]["inline"] + st["routes"]["pool"] == 10
+    assert serving._submitted == serving._completed == 13
 
 
 def test_cache_hit_shape_matches_fresh(serving):
@@ -370,3 +402,53 @@ def test_tier_reads_skip_the_jvm_and_fair_pools_hold(spark, monkeypatch):
                 pools.append(st.schedulingPool())
     assert pools, "the distributed read ran no stage"
     assert set(pools) <= workers, (pools, workers)
+
+
+def test_tier_reads_answer_on_the_event_loop(spark):
+    """Reads the resident tier answers run on the caller's event loop:
+    no executor thread ever starts for them. A tier decline (a regex
+    filter) goes through the pool and answers as Engine.query does,
+    concurrent clients' inline reads interleave, and status() counts
+    each route."""
+    graph = build_from_iterator(spark, TRIPLES).cache()
+    eng = Engine(graph)
+    eng.query({"filters": [{"p": "<p/name>"}], "size": 1})  # build the tier
+    srv = Serving(eng, num_workers=2)
+    reads = [
+        {"filters": [{"p": "<p/name>", "o": f'"{v}"'}], "use_cache": False}
+        for v in ("alpha", "beta", "gamma")
+    ]
+
+    async def serial():
+        return [await srv.query_async(o) for o in reads * 4]
+
+    rs = asyncio.run(serial())
+    assert srv._pool._threads == set()
+    assert [list(r["results"]) for r in rs[:3]] == [["<e/1>"], ["<e/2>"], ["<e/3>"]]
+
+    regex = {"filters": [{"p": "regex", "o": '"al.*"'}], "use_cache": False}
+    got = asyncio.run(srv.query_async(regex, timeout=120))
+    assert srv._pool._threads
+    want = eng.query(dict(regex))
+    assert {k: got[k] for k in want} == want
+    assert list(got["results"]) == ["<e/1>"]
+
+    order = []
+
+    async def client(name):
+        for _ in range(5):
+            await srv.query_async(reads[0])
+            order.append(name)
+
+    async def both():
+        await asyncio.gather(client("a"), client("b"))
+
+    asyncio.run(both())
+    assert order == ["a", "b"] * 5
+
+    st = srv.status()
+    srv.close()
+    assert st["routes"] == {"inline": 22, "pool": 1}
+    assert st["errors"] == 0 and st["in_flight"] == 0 and st["queue_depth"] == 0
+    assert st["queries_served"] == 23
+    assert srv._submitted == srv._completed == st["queries_served"]

@@ -94,6 +94,29 @@ def test_read_nt_parse_plan_single_split(spark, nt_file):
     assert plan.count("split(") == 1, plan
 
 
+def test_read_nt_fans_out_only_narrow_dumps(spark, tmp_path, nt_file):
+    """A dump in defaultParallelism gzip parts parses in place, with no
+    round-robin shuffle of the token arrays; a single file still fans
+    out to the session's width."""
+    import gzip
+
+    n = spark.sparkContext.defaultParallelism
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    for i in range(n):
+        with gzip.open(parts / f"part-{i}.nt.gz", "wt") as f:
+            f.write(f'<http://ex/s{i}> <http://ex/p> "v {i}" .\n')
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    wide = read_nt(spark, str(parts), decode_escapes=False)
+    assert "RoundRobinPartitioning" not in plan(wide), plan(wide)
+    assert {r["s"] for r in wide.collect()} == {f"<http://ex/s{i}>" for i in range(n)}
+    narrow = read_nt(spark, nt_file, decode_escapes=False)
+    assert f"RoundRobinPartitioning({n})" in plan(narrow), plan(narrow)
+
+
 def test_nt_to_graph_query(spark, nt_file):
     g = from_string_quads(read_nt(spark, nt_file))
     eng = Engine(g)

@@ -70,6 +70,9 @@ def test_manifest_written_and_attached(spark, store):
     with open(os.path.join(store, "_meta.json")) as f:
         meta = json.load(f)
     assert meta["n_triples"] == 1200
+    terms = spark.read.parquet(os.path.join(store, "terms")).select("value").collect()
+    assert meta["n_terms"] == len(terms)
+    assert meta["blob_bytes"] == sum(len(r["value"].encode("utf-8")) for r in terms)
     g = read_graph(spark, store)
     assert g.store_meta == meta
     assert g.tier_dir == os.path.join(store, "_tier")
