@@ -24,8 +24,16 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 # Literal lexical forms start with '"' (N-Triples); IRIs with '<',
 # blank nodes with '_:'. Same convention as reference main.py:199-204.
@@ -235,6 +243,31 @@ def build_from_iterator(spark: SparkSession, rows, graph: str = "", batch_size: 
 
 TERM_BUCKETS = 64
 
+# The store schemas, owned by the writer: write_graph casts its frames
+# to exactly these columns and read_graph opens the files with them, so
+# a store open infers nothing from parquet footers (no Spark job) and
+# the two sides cannot drift. ``triples_by_s`` shares TRIPLES_SCHEMA;
+# ``bucket`` is the terms partition column (absent from un-bucketed
+# stores of earlier versions, which read_graph detects by listing).
+TRIPLES_SCHEMA = StructType([StructField(c, LongType()) for c in ("s", "p", "o", "g")])
+TERMS_SCHEMA = StructType(
+    [
+        StructField("hash", LongType()),
+        StructField("value", StringType()),
+        StructField("is_literal", BooleanType()),
+    ]
+)
+TERMS_BUCKETED_SCHEMA = StructType(
+    TERMS_SCHEMA.fields + [StructField("bucket", IntegerType())]
+)
+
+
+def conform(df: DataFrame, schema: StructType) -> DataFrame:
+    """``df`` cast to exactly ``schema``'s columns, in its order: what a
+    writer stores, so a reader holding the same schema opens the files
+    without inferring one."""
+    return df.select(*(F.col(f.name).cast(f.dataType) for f in schema.fields))
+
 
 def align_terms(base_terms: DataFrame, new_terms: DataFrame) -> DataFrame:
     """Shape a canonical (hash, value, is_literal) new-terms frame to
@@ -271,8 +304,12 @@ def write_graph(
     versions read back fine (the probe just skips the bucket
     predicate).
 
+    The frames are cast to the writer-owned ``TRIPLES_SCHEMA`` /
+    ``TERMS_SCHEMA``, which read_graph opens the files with.
+
     Also maintains the store MANIFEST (``{path}/_meta.json``:
-    n_triples / n_terms / blob_bytes — tier and term-cache sizing
+    n_triples / n_terms / blob_bytes, counted by ``Observation``s on
+    the frames as they are written — tier and term-cache sizing
     verdicts then cost zero Spark jobs) and deletes any persisted tier
     artifact (``{path}/_tier``, plans/local_tier.persist_tier) before
     writing — coherence for both sidecars is writer-owned: a store
@@ -280,14 +317,29 @@ def write_graph(
     describing the OLD content. Appends drop both too (the manifest
     describes the whole store, not the appended slice)."""
     _drop_store_sidecars(graph.spark, path)
+    overwrite = mode == "overwrite"
+    triples = conform(graph.triples, TRIPLES_SCHEMA)
+    terms = conform(graph.terms, TERMS_SCHEMA)
+    if overwrite:
+        # the manifest is counted on the rows as they are written: no
+        # read-back of the files, no second pass over the lineage
+        obs_t, obs_d = Observation("triples"), Observation("terms")
+        triples = triples.observe(obs_t, F.count(F.lit(1)).alias("n"))
+        terms = terms.observe(
+            obs_d,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.octet_length("value")).alias("b"),
+        )
     (
-        graph.triples.repartition("p")
+        triples.repartition("p")
         .sortWithinPartitions("p", "s")
         .write.mode(mode)
         .parquet(f"{path}/triples")
     )
     (
-        graph.terms.withColumn("bucket", F.pmod(F.col("hash"), F.lit(TERM_BUCKETS)))
+        terms.withColumn(
+            "bucket", F.pmod(F.col("hash"), F.lit(TERM_BUCKETS)).cast("int")
+        )
         .repartition("bucket")
         .sortWithinPartitions("hash")
         .write.mode(mode)
@@ -301,30 +353,41 @@ def write_graph(
         # scanning the corpus — one projection per probe axis, the
         # storage trade every columnar warehouse makes. Doubles the
         # store's triples footprint; opt-in.
-        (
-            graph.triples.repartitionByRange("s")
-            .sortWithinPartitions("s", "p")
-            .write.mode(mode)
-            .parquet(f"{path}/triples_by_s")
-        )
-    if mode == "overwrite":
-        # from the files just written: the graph's own frames would
-        # re-run its whole lineage (parse, shuffles, distinct) twice
-        spark = graph.spark
-        n_triples = spark.read.parquet(f"{path}/triples").count()
-        row = (
-            spark.read.parquet(f"{path}/terms")
-            .agg(F.count("*").alias("n"), F.sum(F.octet_length("value")).alias("b"))
-            .first()
-        )
-        _write_store_manifest(
-            path,
-            {
-                "n_triples": int(n_triples),
-                "n_terms": int(row["n"]),
-                "blob_bytes": int(row["b"] or 0),
-            },
-        )
+        _by_s(graph).write.mode(mode).parquet(f"{path}/triples_by_s")
+    if overwrite:
+        t, d = _observed(obs_t), _observed(obs_d)
+        if t and d:
+            _write_store_manifest(
+                path,
+                {
+                    "n_triples": int(t["n"]),
+                    "n_terms": int(d["n"]),
+                    "blob_bytes": int(d["b"] or 0),
+                },
+            )
+
+
+def _observed(obs: Observation) -> dict | None:
+    """An Observation's metrics after its frame's action, or None when
+    the action recorded none: the optimizer drops the observer from a
+    plan it proves empty. The store then goes without a manifest, which
+    only costs the sizing verdicts their bounded probes."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return obs.get
+    except Py4JJavaError:
+        return None
+
+
+def _by_s(graph: Graph) -> DataFrame:
+    """The ``triples_by_s`` projection as written: the store's triples
+    clustered by subject."""
+    return (
+        conform(graph.triples, TRIPLES_SCHEMA)
+        .repartitionByRange("s")
+        .sortWithinPartitions("s", "p")
+    )
 
 
 def write_s_projection(graph: Graph, path: str) -> bool:
@@ -361,12 +424,7 @@ def write_s_projection(graph: Graph, path: str) -> bool:
         fs = jpath.getFileSystem(hconf)
         if fs.exists(jpath):
             return False
-        (
-            graph.triples.repartitionByRange("s")
-            .sortWithinPartitions("s", "p")
-            .write.mode("overwrite")
-            .parquet(f"{path}/triples_by_s")
-        )
+        _by_s(graph).write.mode("overwrite").parquet(f"{path}/triples_by_s")
         return True
     base = path.split("://", 1)[-1] if "://" in path else path
     final = os.path.join(base, "triples_by_s")
@@ -374,12 +432,7 @@ def write_s_projection(graph: Graph, path: str) -> bool:
         return False
     tmp = os.path.join(base, "triples_by_s.tmp")
     shutil.rmtree(tmp, ignore_errors=True)
-    (
-        graph.triples.repartitionByRange("s")
-        .sortWithinPartitions("s", "p")
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
+    _by_s(graph).write.mode("overwrite").parquet(tmp)
     os.rename(tmp, final)
     return True
 
@@ -456,69 +509,61 @@ def read_graph(spark: SparkSession, path: str) -> Graph:
     resurrect every deleted quad (and double-count re-inserts)."""
     import os
 
-    def _is_log_store() -> bool:
-        # Probe through the Hadoop FileSystem API so detection works on
-        # ANY Spark-readable URI (hdfs://, s3a://, file:/) — an os.*
-        # probe only sees the driver's local disk, so a remote
-        # log-structured store would silently fall through to the raw
-        # parquet read and resurrect every deleted quad.
-        #
-        # Fall back to the driver-local probe ONLY when the JVM handle
-        # is genuinely absent (Spark Connect: no sparkContext/_jvm). A
-        # REAL filesystem error (transient s3a/hdfs failure, auth)
-        # must propagate: degrading it to the local probe would
-        # misdetect a remote log-structured store as plain parquet and
-        # silently resurrect every deleted quad.
-        try:
-            # the guard covers ONLY handle acquisition — a Connect
-            # session raises here (no sparkContext / no gateway); every
-            # actual filesystem call happens outside it and propagates
-            sc = spark.sparkContext
-            jvm, hconf = sc._jvm, sc._jsc.hadoopConfiguration()
-            jvm_ok = jvm is not None
-        except Exception:
-            jvm_ok = False
-        if jvm_ok:
-            jpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = jpath.getFileSystem(hconf)
-            for sub in ("tombstones", "tombstones_spg"):
-                if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")):
-                    return True
-            tri = jvm.org.apache.hadoop.fs.Path(f"{path}/triples")
-            if not fs.exists(tri):
-                return False
-            return any(
-                st.getPath().getName().startswith("batch=")
-                for st in fs.listStatus(tri)
-            )
-        if os.path.isdir(f"{path}/tombstones") or os.path.isdir(
-            f"{path}/tombstones_spg"
-        ):
-            return True
-        try:
-            return any(
-                e.startswith("batch=") for e in os.listdir(f"{path}/triples")
-            )
-        except OSError:
-            return False
+    # Listing goes through the Hadoop FileSystem API so detection works
+    # on ANY Spark-readable URI (hdfs://, s3a://, file:/) — an os.*
+    # probe only sees the driver's local disk, so a remote
+    # log-structured store would silently fall through to the raw
+    # parquet read and resurrect every deleted quad.
+    #
+    # Fall back to the driver-local probe ONLY when the JVM handle is
+    # genuinely absent (Spark Connect: no sparkContext/_jvm). A REAL
+    # filesystem error (transient s3a/hdfs failure, auth) must
+    # propagate: degrading it to the local probe would misdetect a
+    # remote log-structured store as plain parquet and silently
+    # resurrect every deleted quad.
+    try:
+        # the guard covers ONLY handle acquisition — a Connect session
+        # raises here (no sparkContext / no gateway); every actual
+        # filesystem call happens outside it and propagates
+        sc = spark.sparkContext
+        jvm, hconf = sc._jvm, sc._jsc.hadoopConfiguration()
+        jvm_ok = jvm is not None
+    except Exception:
+        jvm_ok = False
 
-    if _is_log_store():
+    def _names(sub: str = ""):
+        """Entry names under ``{path}/{sub}``, lazily (callers stop at
+        the first match); nothing when the directory is absent."""
+        target = f"{path}/{sub}" if sub else path
+        if jvm_ok:
+            jpath = jvm.org.apache.hadoop.fs.Path(target)
+            fs = jpath.getFileSystem(hconf)
+            if fs.exists(jpath):
+                yield from (st.getPath().getName() for st in fs.listStatus(jpath))
+            return
+        try:
+            yield from os.listdir(target)
+        except OSError:
+            return
+
+    root = set(_names())
+    if {"tombstones", "tombstones_spg"} & root or any(
+        n.startswith("batch=") for n in _names("triples")
+    ):
         from .streaming.mutations import read_store
 
         return read_store(spark, path)
 
-    def _exists(sub: str) -> bool:
-        try:
-            jvm = spark.sparkContext._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")
-            fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-            return bool(fs.exists(jpath))
-        except Exception:
-            return os.path.isdir(f"{path}/{sub}")
-
+    # the writer's schemas: opening the store infers nothing from
+    # parquet footers, and the partition listing stays on the driver
+    # (session.get_spark's parallelPartitionDiscovery threshold), so
+    # the open runs no Spark job. Terms from stores of earlier versions
+    # carry no bucket= directories and no bucket column.
+    bucketed = any(n.startswith("bucket=") for n in _names("terms"))
+    terms_schema = TERMS_BUCKETED_SCHEMA if bucketed else TERMS_SCHEMA
     sproj = (
-        spark.read.parquet(f"{path}/triples_by_s")
-        if _exists("triples_by_s")
+        spark.read.schema(TRIPLES_SCHEMA).parquet(f"{path}/triples_by_s")
+        if "triples_by_s" in root
         else None
     )
     # sidecars: the manifest makes tier/term-cache sizing verdicts
@@ -545,8 +590,8 @@ def read_graph(spark: SparkSession, path: str) -> Graph:
         except OSError:
             pass
     return Graph(
-        triples=spark.read.parquet(f"{path}/triples"),
-        terms=spark.read.parquet(f"{path}/terms"),
+        triples=spark.read.schema(TRIPLES_SCHEMA).parquet(f"{path}/triples"),
+        terms=spark.read.schema(terms_schema).parquet(f"{path}/terms"),
         s_projection=sproj,
         store_meta=read_store_manifest(path),
         tier_dir=tier_dir,

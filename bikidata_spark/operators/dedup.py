@@ -50,6 +50,16 @@ def shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     )
 
 
+def _materialized(df: DataFrame) -> DataFrame:
+    """``df`` persisted and filled now, before a plan branches over it.
+    A lazily persisted frame is no guard: AQE submits the branches'
+    shuffle-map stages together, before any of them has filled the
+    cache."""
+    df = df.persist()
+    df.count()
+    return df
+
+
 MINHASH_P = (1 << 31) - 1  # Mersenne prime 2^31-1
 
 
@@ -148,7 +158,7 @@ def minhash_lsh_pairs(
     high-recall mode, r>=2 the scale default — see
     :func:`minhash_band_candidates`), verified by exact shingle
     Jaccard >= num/den."""
-    sh = shingles(df, id_col, text_col, k).persist()
+    sh = _materialized(shingles(df, id_col, text_col, k))
     cands = minhash_band_candidates(sh, num_hashes, rows_per_band)
     # verification: per-doc shingle-hash sets joined to the candidate
     # pairs, intersection via array_intersect — candidate-driven work
@@ -269,7 +279,7 @@ def ngram_jaccard_pairs(
     flow straight into a map-side-combined count whose shuffle carries
     only (id_a, id_b) pairs either way. Reverted; the string key keeps
     the operator collision-free for the oracle hash."""
-    sh = shingles(df, id_col, text_col, n).persist()
+    sh = _materialized(shingles(df, id_col, text_col, n))
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     postings = sh
     if max_df is not None:

@@ -16,10 +16,33 @@ making a probe a partition-pruned scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
+from ..graph import conform
 from ..session import ensure_parallelism
+
+# The IVF store schemas, owned by the writer like graph.TRIPLES_SCHEMA:
+# write_ivf_store casts to them and read_ivf_store opens the files with
+# them, so a store open infers nothing (no Spark job). Ids are longs;
+# ``cell`` (the vectors partition column) is the assigned centroid's
+# ``cid``, so it is a long too.
+IVF_VECTORS_SCHEMA = StructType(
+    [
+        StructField("nid", LongType()),
+        StructField("nv", ArrayType(DoubleType())),
+        StructField("cell", LongType()),
+    ]
+)
+IVF_CENTROIDS_SCHEMA = StructType(
+    [StructField("cid", LongType()), StructField("cv", ArrayType(DoubleType()))]
+)
+
+
+def read_centroids(spark, path: str) -> DataFrame:
+    """The centroid table of the IVF store at ``path``."""
+    return spark.read.schema(IVF_CENTROIDS_SCHEMA).parquet(f"{path}/centroids")
 
 
 def _dot(a, b):
@@ -572,19 +595,28 @@ def write_ivf_store(
         est_cells = None  # Lloyd can shrink k; re-derive from the tiny store below
     # materialize the (tiny) centroid table FIRST so both the store
     # write and the assignment read one small parquet scan instead of
-    # re-deriving the seed filter over the corpus
-    cents.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    # re-deriving the seed filter over the corpus; the write counts it
+    obs = Observation("centroids")
+    (
+        conform(cents, IVF_CENTROIDS_SCHEMA)
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{path}/centroids")
+    )
     try:
         cents.unpersist()  # kmeans_refine returns a persisted frame
     except Exception:
         pass
-    cents = vectors.sparkSession.read.parquet(f"{path}/centroids")
+    cents = read_centroids(vectors.sparkSession, path)
     # est_cells is None after a refine (k can shrink) or with caller
-    # centroids: _assign_cells then counts the tiny materialized
-    # parquet — one footer-metadata job, never a corpus pass
+    # centroids: the write's own count then sizes the assignment
+    if est_cells is None:
+        est_cells = int(obs.get["n"])
     assign = _assign_cells(v, cents, n_cells=est_cells)
     (
-        assign.repartition("cell")
+        conform(assign, IVF_VECTORS_SCHEMA)
+        .repartition("cell")
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(f"{path}/vectors")
@@ -613,8 +645,7 @@ def append_ivf_store(
     Duplicate ids are the caller's contract (like most ANN builders):
     re-appending an id adds a second copy until a rebuild. Returns the
     number of rows appended."""
-    spark = vectors.sparkSession
-    cents = spark.read.parquet(f"{path}/centroids")
+    cents = read_centroids(vectors.sparkSession, path)
     v = _as_double(
         ensure_parallelism(vectors).select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv")),
         "nv",
@@ -628,7 +659,8 @@ def append_ivf_store(
         assign = _assign_cells(v, cents)
         n = v.count()
         (
-            assign.repartition("cell")
+            conform(assign, IVF_VECTORS_SCHEMA)
+            .repartition("cell")
             .write.mode("append")
             .partitionBy("cell")
             .parquet(f"{path}/vectors")
@@ -663,7 +695,7 @@ def compact_ivf_store(spark, store_dir: str, force: bool = False) -> dict:
     import glob
 
     _recover_ivf_store(store_dir)
-    vectors = spark.read.parquet(f"{store_dir}/vectors").select("nid", "nv", "cell")
+    vectors = spark.read.schema(IVF_VECTORS_SCHEMA).parquet(f"{store_dir}/vectors")
     stream = _stream_tree(store_dir)
     # snapshot the batch dirs NOW: a live append stream may commit new
     # batches while we compact, and only the dirs we actually folded in
@@ -672,7 +704,8 @@ def compact_ivf_store(spark, store_dir: str, force: bool = False) -> dict:
     stream_batches = sorted(glob.glob(f"{stream}/batch=*")) if stream else []
     if stream_batches:
         vectors = vectors.unionByName(
-            spark.read.option("basePath", stream)
+            spark.read.schema(IVF_VECTORS_SCHEMA)
+            .option("basePath", stream)
             .parquet(*stream_batches)
             .select("nid", "nv", "cell")
         )
@@ -738,15 +771,18 @@ def read_ivf_store(spark, path: str) -> tuple[DataFrame, DataFrame]:
     """(vectors, centroids) of a persisted IVF store; ``vectors``
     carries the ``cell`` partition column for pruned scans. Streamed
     appends (the ``vectors_stream`` tree) are unioned in — ``cell`` is
-    a partition column in both trees, so pruning is unaffected."""
+    a partition column in both trees, so pruning is unaffected. Both
+    trees open with the writer's schemas (the stream tree's ``batch``
+    partition column comes from its directory names), so the open
+    infers nothing from parquet footers."""
     _recover_ivf_store(path)
-    vectors = spark.read.parquet(f"{path}/vectors").select("nid", "nv", "cell")
+    vectors = spark.read.schema(IVF_VECTORS_SCHEMA).parquet(f"{path}/vectors")
     st = _stream_tree(path)
     if st:
         vectors = vectors.unionByName(
-            spark.read.parquet(st).select("nid", "nv", "cell")
+            spark.read.schema(IVF_VECTORS_SCHEMA).parquet(st).select("nid", "nv", "cell")
         )
-    return vectors, spark.read.parquet(f"{path}/centroids")
+    return vectors, read_centroids(spark, path)
 
 
 def ivf_store_topk(

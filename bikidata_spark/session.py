@@ -11,6 +11,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .graph import TERM_BUCKETS
+
+# Spark's generated-class cache (static, default 100 entries). One batch
+# pass (ingest, write, dedup, IVF store, events, text) compiles ~180-210
+# distinct classes, so at the default a second pass in the same process
+# recompiled nearly all of them. 1000 entries hold about five passes;
+# measured at ~20-30 KB of driver heap per entry (local[4]), ~25 MB
+# when full.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def _fanout_bytes() -> int:
     """Bytes of (optimizer-estimated) input per fan-out partition.
@@ -24,7 +34,7 @@ def _fanout_bytes() -> int:
     return max(1, int(os.environ.get("BIKIDATA_SPARK_FANOUT_BYTES", str(256 << 10))))
 
 
-def ensure_parallelism(df, min_partitions: int | None = None, density: int = 1):
+def ensure_parallelism(df, min_partitions: int | None = None):
     """Fan a tiny input out toward the session's parallelism, sized by
     the DATA rather than the core count (guide §2.2/§6).
 
@@ -48,17 +58,6 @@ def ensure_parallelism(df, min_partitions: int | None = None, density: int = 1):
     wherever the input is big enough to use every core — so cluster
     deployments see no change. An unavailable or unparseable estimate
     falls back to the core count (the pre-r14 width, never narrower).
-
-    ``density`` (r15) is the per-operator compute-density hint: an
-    operator doing ``density``× the default work per input byte
-    divides the byte target by it, widening ITS fan-out without
-    moving the global default (one knob cannot fit operators with
-    10-100× different work per byte — VERDICT r14 item 2; the
-    interleaved q_ann_ivf A/B measured the 256 KiB default costing
-    the IVF assignment fold ~15% vs full width, while the sweep knee
-    for the cheap operators sits exactly at 256 KiB). The
-    ``defaultParallelism`` cap still binds, so cluster-scale behavior
-    is unchanged.
 
     Partition-count introspection goes through the JVM query execution
     (no ``df.rdd``, which would build a Python RDD wrapper and force a
@@ -84,8 +83,7 @@ def ensure_parallelism(df, min_partitions: int | None = None, density: int = 1):
         try:
             est = int(str(qe.optimizedPlan().stats().sizeInBytes()))
             if est > 0:
-                per_part = max(1, _fanout_bytes() // max(1, density))
-                target = min(cores, -(-est // per_part))
+                target = min(cores, -(-est // _fanout_bytes()))
         except Exception:
             pass  # no estimate: keep the conservative full-width fan-out
     if n < target:
@@ -140,6 +138,16 @@ def get_spark(app_name: str = "bikidata-spark", shuffle_partitions: int | None =
         # attempt (pyspark errors/utils.py _with_origin). DataFrame
         # errors then lose that Python call-site context.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # list partition directories on the driver up to the widest
+        # layout the engine writes (the terms dictionary's TERM_BUCKETS
+        # directories; the FTS store's default num_buckets is the same
+        # 64): past Spark's default of 32, every store open ran a
+        # 64-task listing job. Wider user datasets still list in
+        # parallel.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(TERM_BUCKETS)
+        )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -28,7 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.similarity import _as_double, _assign_cells
+from ..graph import conform
+from ..operators.similarity import (
+    IVF_VECTORS_SCHEMA,
+    _as_double,
+    _assign_cells,
+    read_centroids,
+)
 
 
 def start_ivf_append(
@@ -43,7 +49,7 @@ def start_ivf_append(
     store at ``store_dir`` (which must already exist — the committed
     centroid table defines the cells). Returns the StreamingQuery."""
     spark = stream_df.sparkSession
-    cents = spark.read.parquet(f"{store_dir}/centroids")
+    cents = read_centroids(spark, store_dir)
     # the committed centroid table is tiny and immutable for the
     # stream's lifetime: size the assignment strategy once up front
     n_cells = cents.count()
@@ -54,7 +60,8 @@ def start_ivf_append(
         )
         assign = _assign_cells(v, cents, n_cells=n_cells)
         (
-            assign.repartition("cell")
+            conform(assign, IVF_VECTORS_SCHEMA)
+            .repartition("cell")
             .write.mode("overwrite")
             .partitionBy("cell")
             .parquet(f"{store_dir}/vectors_stream/batch={batch_id}")

@@ -38,6 +38,9 @@ def test_fanout_width_derives_from_size(spark, docs, monkeypatch):
     assert _nparts(ensure_parallelism(docs)) == _nparts(docs)
     # explicit min_partitions bypasses the estimate entirely
     assert _nparts(ensure_parallelism(docs, min_partitions=5)) == 5
+    # a target of half the estimate asks for exactly 2 partitions
+    monkeypatch.setenv("BIKIDATA_SPARK_FANOUT_BYTES", str(-(-_est_bytes(docs) // 2)))
+    assert _nparts(ensure_parallelism(docs)) == min(2, cores)
     monkeypatch.delenv("BIKIDATA_SPARK_FANOUT_BYTES")
     # default target: between no-op and the cores cap, never wider
     assert 1 <= _nparts(ensure_parallelism(docs)) <= max(cores, _nparts(docs))
@@ -58,26 +61,6 @@ def test_fanout_cluster_shape_caps_at_cores(spark, docs, monkeypatch):
     target = max(1, est // (cores * 10))
     monkeypatch.setenv("BIKIDATA_SPARK_FANOUT_BYTES", str(target))
     assert _nparts(ensure_parallelism(docs)) == cores
-
-
-def test_fanout_density_hint_widens(spark, docs, monkeypatch):
-    """r15: the per-operator compute-density hint divides the byte
-    target, widening that operator's fan-out below the cores cap —
-    and the cap still binds, so density changes nothing at cluster
-    scale."""
-    cores = spark.sparkContext.defaultParallelism
-    est = _est_bytes(docs)
-    assert est > 0
-    # pick a target that yields exactly 2 partitions at density 1 ...
-    target = -(-est // 2)
-    monkeypatch.setenv("BIKIDATA_SPARK_FANOUT_BYTES", str(target))
-    assert _nparts(ensure_parallelism(docs)) == 2
-    # ... then density 4 asks for ~4x the width (integer rounding of
-    # the byte target makes it 8-or-9), still bounded by the cap
-    w4 = _nparts(ensure_parallelism(docs, density=4))
-    assert 2 < w4 <= max(cores, 9) and w4 >= min(8, cores)
-    # and a huge density saturates at the cores cap, never past it
-    assert _nparts(ensure_parallelism(docs, density=1 << 30)) == cores
 
 
 def test_fanout_min_partitions_validated(docs):

@@ -83,6 +83,34 @@ def test_ngram_jaccard(spark):
     assert (1, 2) in pairs
 
 
+def test_pair_operators_fill_shingles_before_branching(spark):
+    """Both pair operators branch over one persisted shingle frame. It
+    must be filled before the pairs plan runs: AQE submits the branches'
+    shuffle-map stages together, and over an unfilled cache all but one
+    of their tasks hold a core waiting for the first to compute the
+    block (3× the executor run time on the perfbench documents)."""
+
+    def filled() -> set:
+        return {
+            r.id()
+            for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            if 0 < r.numCachedPartitions() == r.numPartitions()
+        }
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    rows = [(0, base), (1, base + " tail")]
+    rows += [(i, f"alpha beta gamma x{i} y{i} z{i} w{i}") for i in range(2, 24)]
+    for fn in (dd.minhash_lsh_pairs, dd.ngram_jaccard_pairs):
+        # text unique to this call, so no earlier cache can serve it
+        docs = spark.createDataFrame(
+            [(i, f"{t} {fn.__name__}") for i, t in rows], "doc_id long, text string"
+        )
+        before = filled()
+        pairs = fn(docs, "doc_id", "text")
+        assert filled() - before, f"{fn.__name__}: shingles not filled before the plan runs"
+        assert (0, 1) in {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+
+
 def test_cosine_topk_exact(spark, embeddings):
     q = embeddings.filter(F.col("vec_id") < 2)
     out = sim.cosine_topk(embeddings, q, k=5).collect()
@@ -308,23 +336,35 @@ def test_graph_store_terms_bucket_pruning(spark, tmp_path):
     """r6: the persisted terms dictionary is hash-bucketed; a bounded
     term probe from the cold store partition-prunes to its hashes'
     bucket directories and still resolves every value. An Engine over
-    the store answers queries end-to-end."""
+    the store answers queries end-to-end, and so does one over a store
+    of an earlier version whose terms are not bucketed."""
     from pyspark.sql import functions as F
 
     from bikidata_spark import Engine, from_string_quads, read_graph, write_graph
-    from bikidata_spark.graph import TERM_BUCKETS
+    from bikidata_spark.graph import TERM_BUCKETS, TERMS_BUCKETED_SCHEMA, TERMS_SCHEMA
 
     quads = spark.createDataFrame(
         [(f"<e/{i}>", "<p/a>", f'"v{i}"', "") for i in range(50)],
         "s string, p string, o string, g string",
     )
-    write_graph(from_string_quads(quads), str(tmp_path / "g"))
-    g = read_graph(spark, str(tmp_path / "g"))
-    assert "bucket" in g.terms.columns
-    eng = Engine(g)
-    # engine query end-to-end from the bucketed store
-    out = eng.query({"filters": [{"p": "<p/a>", "o": '"v7"'}], "size": 5})
-    assert out["total"] == 1 and "<e/7>" in out["results"]
+    graph = from_string_quads(quads)
+    write_graph(graph, str(tmp_path / "g"))
+    # a store of an earlier version: terms written without partitionBy
+    legacy = str(tmp_path / "legacy")
+    graph.triples.write.parquet(f"{legacy}/triples")
+    graph.terms.write.parquet(f"{legacy}/terms")
+    assert read_graph(spark, legacy).terms.schema == TERMS_SCHEMA
+    assert read_graph(spark, str(tmp_path / "g")).terms.schema == TERMS_BUCKETED_SCHEMA
+    for path in (legacy, str(tmp_path / "g")):
+        # both layouts open with the writer's schemas, as inference
+        # would read them
+        g = read_graph(spark, path)
+        for got, inferred in ((g.triples, "triples"), (g.terms, "terms")):
+            assert got.schema == spark.read.parquet(f"{path}/{inferred}").schema
+        # engine query end-to-end from the store
+        eng = Engine(g)
+        out = eng.query({"filters": [{"p": "<p/a>", "o": '"v7"'}], "size": 5})
+        assert out["total"] == 1 and "<e/7>" in out["results"]
     # the probe plan carries PartitionFilters on bucket
     some = [r["hash"] for r in g.terms.limit(3).collect()]
     buckets = sorted({h % TERM_BUCKETS for h in some})
@@ -643,10 +683,20 @@ def test_cap_per_source_bucketed_skew_free(spark):
 
 def test_ivf_store_pruned_matches_inmemory(spark, embeddings, tmp_path):
     """Persisted IVF store: identical results to the in-memory operator
-    AND the vector scan partition-prunes to the probed cells."""
+    AND the vector scan partition-prunes to the probed cells. The store
+    opens with the writer's schemas: 0 Spark jobs."""
     q = embeddings.filter(F.col("vec_id") < 5)
     sim.write_ivf_store(embeddings, str(tmp_path / "ivf"), refine_iters=2, quantize=6)
-    vectors, cents = sim.read_ivf_store(spark, str(tmp_path / "ivf"))
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-open", "probe")
+    try:
+        vectors, cents = sim.read_ivf_store(spark, str(tmp_path / "ivf"))
+        jobs = sc.statusTracker().getJobIdsForGroup("ivf-open")
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) == 0, f"read_ivf_store scheduled Spark jobs: {jobs}"
+    assert vectors.schema == sim.IVF_VECTORS_SCHEMA
+    assert cents.schema == sim.IVF_CENTROIDS_SCHEMA
     stored = sim.ivf_store_topk(vectors, cents, q)
     inmem = sim.ivf_ann_topk(embeddings, q, refine_iters=2, quantize=6)
     a = sorted((r["qid"], r["neighbor"], r["rank"]) for r in stored.collect())

@@ -1673,7 +1673,15 @@ def test_streaming_ivf_append(spark, tmp_path):
     q = start_ivf_append(stream, store, str(tmp_path / "ckpt"))
     q.awaitTermination(60)
 
-    vectors, cents = read_ivf_store(spark, store)
+    # both trees open with the writer's schemas: no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-stream-open", "probe")
+    try:
+        vectors, cents = read_ivf_store(spark, store)
+        jobs = sc.statusTracker().getJobIdsForGroup("ivf-stream-open")
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) == 0, f"read_ivf_store scheduled Spark jobs: {jobs}"
     assert vectors.count() == 40
     # streamed rows are served: a query vector equal to an appended one
     # must rank it first among probed neighbors
